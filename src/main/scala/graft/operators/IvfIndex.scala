@@ -150,10 +150,10 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     // out). A bootstrap writeIndex (empty corpus) records nothing — the
     // first maintenance fold becomes the baseline.
     val obs = new org.apache.spark.sql.Observation()
-    assignWithDist(
-      corpus.select(col(idCol), normalized(col(vecCol)).as("v")), "v", centroids)
+    oneFilePerBucket(assignWithDist(
+        corpus.select(col(idCol), normalized(col(vecCol)).as("v")), "v", centroids)
       .observe(obs, count(lit(1)).as("n"), avg(col("_adist")).as("m"))
-      .drop("_adist")
+      .drop("_adist"), graft.core.FastPlan.isSmall(corpus))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/corpus")
     // a rebuild supersedes any pending maintenance generations of the old
     // layout — clear them or reads would resolve stale deltas over it
@@ -401,7 +401,12 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     * deltas (a fresh [[writeIndex]], or right after [[compactLayout]])
     * this is a plain partition-pruned parquet read — zero extra shuffles;
     * with pending deltas the resolve is one HashAggregate over the PROBED
-    * buckets' rows only. */
+    * buckets' rows only.
+    *
+    * Driver cost is flat in the number of pending generations: the base
+    * is read once (its one schema-inference job), and every generation is
+    * read with the schema GIVEN ([[readGens]]), so a generation adds a
+    * directory listing and a union leg but no Spark job. */
   def readLayout(spark: org.apache.spark.sql.SparkSession, layoutPath: String,
       idCol: String, buckets: Option[Seq[Int]] = None): DataFrame = {
     def prune(df: DataFrame): DataFrame =
@@ -409,22 +414,16 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     val gens = deltaGens(layoutPath)
     if (gens.isEmpty) prune(spark.read.parquet(layoutPath))
     else {
-      // one read per generation root (each is its own bucket-partitioned
-      // tree — a multi-root read trips partition-structure inference);
-      // the union collapses into one scan stage and the bucket filter
-      // pushes into every leg
-      val deltas = prune(gens.map(g => spark.read.parquet(g.toString))
-        .reduce(_ unionByName _))
       // a parquet-less base (an interrupted compaction removed every
       // emptied live bucket before clearing the deltas) contributes an
       // empty frame with the delta-derived schema instead of crashing
       // parquet schema inference on the bare root
-      val base =
-        if (hasParquet(java.nio.file.Paths.get(layoutPath)))
-          prune(spark.read.parquet(layoutPath))
-            .withColumn("_gen", lit(0L)).withColumn("_del", lit(false))
-        else deltas.limit(0)
-      val all = base.unionByName(deltas)
+      val base = Option.when(hasParquet(java.nio.file.Paths.get(layoutPath)))(
+        spark.read.parquet(layoutPath))
+      val deltas = prune(readGens(spark, base, gens))
+      val all = base.fold(deltas.limit(0))(b => prune(b)
+          .withColumn("_gen", lit(0L)).withColumn("_del", lit(false)))
+        .unionByName(deltas)
       val outCols = deltas.columns.filterNot(c => c == "_gen" || c == "_del").toSeq
       val dataCols = outCols.filterNot(c => c == idCol || c == "bucket")
       val aggs = dataCols.map(c => max_by(col(c), col("_gen")).as(c)) :+
@@ -436,6 +435,27 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** The pending generations as ONE frame, every generation read with a
+    * GIVEN schema (no schema-inference job per generation): the base's
+    * columns plus `_del` (tombstone) and `_gen` (generation number),
+    * `bucket` the partition column — exactly what [[upsertBucketLayout]]
+    * writes, which casts every generation to the base's types. Without a
+    * base (parquet-less, see [[readLayout]]) the schema is inferred from
+    * the first generation — one job, still flat in the generation count.
+    * Each generation stays its own read root: one `parquet(...)` call over
+    * several `d<gen>/bucket=N` trees fails partition discovery with
+    * CONFLICTING_DIRECTORY_STRUCTURES. The union collapses into one scan
+    * stage and a bucket filter pushes into every leg. */
+  private def readGens(spark: org.apache.spark.sql.SparkSession,
+      base: Option[DataFrame], gens: Seq[java.nio.file.Path]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = base.fold(spark.read.parquet(gens.head.toString).schema)(b =>
+      StructType(b.schema.fields.filterNot(_.name == "bucket") ++ Seq(
+        StructField("_del", BooleanType), StructField("_gen", LongType),
+        b.schema("bucket"))))
+    gens.map(g => spark.read.schema(schema).parquet(g.toString)).reduce(_ unionByName _)
+  }
+
   /** The resolved live (id, bucket) pairs of the TOUCHED ids only — the
     * maintenance fold's old-bucket lookup. The touched semi-join sits
     * BELOW the newest-wins resolve (per-id resolution only needs that
@@ -443,25 +463,33 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     * streamed through one broadcast join — the resolve aggregate then
     * shuffles O(touched ids), never the corpus. Resolving first and
     * joining after would hash-shuffle every corpus id per fold — at
-    * 100 TB with k=4096 that is a full-corpus exchange per micro-batch. */
+    * 100 TB with k=4096 that is a full-corpus exchange per micro-batch.
+    * `base` is the caller's already-read base layout. */
   private def readLayoutIds(spark: org.apache.spark.sql.SparkSession,
-      layoutPath: String, idCol: String, touched: DataFrame): DataFrame = {
+      layoutPath: String, base: DataFrame, idCol: String,
+      touched: DataFrame): DataFrame = {
     def restrict(df: DataFrame): DataFrame =
       df.join(broadcast(touched), Seq(idCol), "left_semi")
-    // a parquet-less base (interrupted compaction) holds no live ids
-    val base = (if (hasParquet(java.nio.file.Paths.get(layoutPath)))
-        restrict(spark.read.parquet(layoutPath).select(col(idCol), col("bucket")))
-      else touched.select(col(idCol), lit(0).cast("int").as("bucket")).limit(0))
+    val baseIds = restrict(base.select(col(idCol), col("bucket")))
       .select(col(idCol), col("bucket"), lit(0L).as("_gen"), lit(false).as("_del"))
     val gens = deltaGens(layoutPath)
-    val all = if (gens.isEmpty) base else base.unionByName(
-      restrict(gens.map(g => spark.read.parquet(g.toString)).reduce(_ unionByName _)
+    val all = if (gens.isEmpty) baseIds else baseIds.unionByName(
+      restrict(readGens(spark, Some(base), gens)
         .select(col(idCol), col("bucket"), col("_gen"), col("_del"))))
     all.groupBy(col("bucket"), col(idCol))
       .agg(max_by(col("_del"), col("_gen")).as("_del"))
       .where(!col("_del"))
       .select(col(idCol), col("bucket"))
   }
+
+  /** `df` hash-partitioned on `bucket` when `small` (the FastPlan size
+    * gate), so a `partitionBy("bucket")` write lands ONE file per bucket
+    * instead of one per task per bucket: a tiny fold otherwise scatters
+    * its few rows over tasks × buckets one-row files, and every later read
+    * pays a task and a footer per file. At scale (`small` false) the write
+    * keeps its parallelism. */
+  private[operators] def oneFilePerBucket(df: DataFrame, small: Boolean): DataFrame =
+    if (small) df.repartition(col("bucket")) else df
 
   /** Any `.parquet` data file under `p`? (schema inference fails on a
     * data-file-less root, so every base read checks this first). */
@@ -516,7 +544,9 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     if (java.nio.file.Files.exists(freshMarker)) { finishSwap(layoutPath); return }
     graft.core.Storage.deleteRecursively(tmp)
     if (deltaGens(layoutPath).isEmpty) return
-    readLayout(spark, layoutPath, idCol)
+    val small = graft.core.FastPlan.isSmallDir(java.nio.file.Paths.get(layoutPath)) &&
+      graft.core.FastPlan.isSmallDir(deltasDir(layoutPath))
+    oneFilePerBucket(readLayout(spark, layoutPath, idCol), small)
       .write.partitionBy("bucket").parquet(tmp.toString)
     // completion point: record the fold's bucket set, then swap. Every
     // step after this line is idempotent and replayed by finishSwap on
@@ -573,21 +603,24 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     * tombstones into every bucket a `touched` id leaves — bytes written
     * ∝ delta; reads resolve through [[readLayout]]. Auto-compacts at
     * [[maxPendingGens]] pending generations. Bootstraps an EMPTY layout:
-    * the first delta becomes the corpus. */
+    * the first delta becomes the corpus.
+    *
+    * Cost per call is flat in the number of pending generations: one
+    * schema-inference job for the base (read once, reused for the
+    * generation schema and the tombstone lookup), none per generation,
+    * one write job (plus its broadcasts) — and, under the FastPlan size
+    * gate, one data file per touched bucket. A call that trips the
+    * threshold adds the compaction's base read and rewrite. */
   private[operators] def upsertBucketLayout(
       spark: org.apache.spark.sql.SparkSession, layoutPath: String,
       idCol: String, newRowsIn: DataFrame, touchedIn: DataFrame): Unit = {
-    val empty = {
-      val p = java.nio.file.Paths.get(layoutPath)
-      !java.nio.file.Files.isDirectory(p) || {
-        val s = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          !s.iterator().asScala.exists(_.toString.endsWith(".parquet"))
-        } finally s.close()
-      }
-    }
-    if (empty) {
+    // an interrupted compaction's swap is finished BEFORE a generation is
+    // appended: finishing clears every pending generation, which would
+    // take one written after the compaction's fold with it
+    if (java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$layoutPath.compact.tmp", "_FRESH")))
+      finishSwap(layoutPath)
+    if (!hasParquet(java.nio.file.Paths.get(layoutPath))) {
       newRowsIn.write.mode("overwrite").partitionBy("bucket").parquet(layoutPath)
       graft.core.Storage.deleteRecursively(deltasDir(layoutPath))
       return
@@ -606,41 +639,40 @@ object IvfIndex extends org.apache.spark.internal.Logging {
         case _           => 1L // unreachable: deltaGens filters by the regex
       })
       .getOrElse(1L)
-    val schema = spark.read.parquet(layoutPath).schema
-    val dataFields = schema.fields.filterNot(f => f.name == idCol || f.name == "bucket")
+    // the base, read ONCE: its schema types the generation (and so every
+    // later generation read, see readGens) and it feeds the tombstone
+    // lookup
+    val base = spark.read.parquet(layoutPath)
+    val fields = base.schema.fields.filterNot(_.name == "bucket").toSeq
+    // both legs cast to the base's types: generations are read with the
+    // base-derived schema, whatever id type the caller's frame carries
+    def typed(df: DataFrame): DataFrame =
+      df.select(fields.map(f => col(f.name).cast(f.dataType).as(f.name)) :+ col("bucket"): _*)
     // tombstones: every bucket a touched id currently LIVES in, minus the
     // bucket its new version lands in (a pure delete has no new version);
     // payload columns are null — the id + bucket + generation is the fact
     val newBuckets = newRowsIn.select(col(idCol), col("bucket").as("_nb"))
-    val tomb = readLayoutIds(spark, layoutPath, idCol, touchedIn)
+    val tomb = readLayoutIds(spark, layoutPath, base, idCol, touchedIn)
       .join(broadcast(newBuckets), Seq(idCol), "left")
       .where(col("_nb").isNull || col("_nb") =!= col("bucket"))
-      .select(col(idCol) +:
-        dataFields.toSeq.map(f => lit(null).cast(f.dataType).as(f.name)) :+
+      .select(fields.map(f =>
+        if (f.name == idCol) col(idCol) else lit(null).as(f.name)) :+
         col("bucket"): _*)
-    val generation = newRowsIn
-      .select((col(idCol) +: dataFields.toSeq.map(f => col(f.name)) :+ col("bucket")) :+
-        lit(false).as("_del"): _*)
-      .unionByName(tomb.withColumn("_del", lit(true)))
+    val generation = typed(newRowsIn).withColumn("_del", lit(false))
+      .unionByName(typed(tomb).withColumn("_del", lit(true)))
       .withColumn("_gen", lit(gen))
     val tmpDir = deltasDir(layoutPath).resolve(f"d$gen%08x.tmp")
     val finalDir = deltasDir(layoutPath).resolve(f"d$gen%08x")
     graft.core.Storage.deleteRecursively(tmpDir)
     graft.core.Storage.deleteRecursively(finalDir)
-    generation.write.partitionBy("bucket").parquet(tmpDir.toString)
+    oneFilePerBucket(generation, small).write.partitionBy("bucket").parquet(tmpDir.toString)
     // an ALL-SILENT fold (empty upserts and deletes — e.g. a micro-batch
     // whose delta netted to same-value rewrites) produces a data-file-less
-    // directory; committing it would poison every later read (parquet
-    // schema inference fails on an empty root). Checked driver-side on the
-    // just-written tree — no extra Spark job.
-    val hasData = {
-      val s = java.nio.file.Files.walk(tmpDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.exists(_.toString.endsWith(".parquet"))
-      } finally s.close()
-    }
-    if (!hasData) graft.core.Storage.deleteRecursively(tmpDir)
+    // directory; committing it would break the parquet-less-base read,
+    // which infers the generation schema from the first generation
+    // (readGens). Checked driver-side on the just-written tree — no extra
+    // Spark job.
+    if (!hasParquet(tmpDir)) graft.core.Storage.deleteRecursively(tmpDir)
     else {
       java.nio.file.Files.move(tmpDir, finalDir)
       if (deltaGens(layoutPath).size >= maxPendingGens)
@@ -653,7 +685,12 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     * bucket ids are collected to the driver (≤ queries×nprobe ints — the
     * query side is small by contract, it is broadcast below) and pushed
     * into the corpus scan as a partition filter: only the probed
-    * `bucket=N/` directories are read (IvfSpec asserts the pruning). */
+    * `bucket=N/` directories are read (IvfSpec asserts the pruning).
+    *
+    * Jobs per call do not depend on the pending generations: the probe
+    * collect, the base's schema inference ([[readLayout]] reads every
+    * generation with a given schema), then the caller's action over one
+    * plan whatever the backlog. */
   def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, nprobe: Int, k: Int,
       knownCentroids: Option[Seq[Seq[Double]]] = None): DataFrame = {

@@ -237,11 +237,12 @@ object PqIndex {
     // drift baseline observed during the write action itself, as in
     // IvfIndex.writeIndex — zero extra jobs
     val obs = new org.apache.spark.sql.Observation()
-    IvfIndex.assignWithDist(
+    IvfIndex.oneFilePerBucket(IvfIndex.assignWithDist(
         corpus.select(col(idCol), col(vecCol),
           IvfIndex.normalized(col(vecCol)).as("_nv")), "_nv", centroids)
       .observe(obs, count(lit(1)).as("n"), avg(col("_adist")).as("m"))
-      .select(col(idCol), codesCol(col(vecCol), cb).as("codes"), col("bucket"))
+      .select(col(idCol), codesCol(col(vecCol), cb).as("codes"), col("bucket")),
+        graft.core.FastPlan.isSmall(corpus))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/codes")
     // a rebuild supersedes pending maintenance generations (IvfIndex LSM)
     graft.core.Storage.deleteRecursively(

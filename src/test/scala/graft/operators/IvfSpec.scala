@@ -252,6 +252,46 @@ class IvfSpec extends AnyFunSuite {
     assert(resolved.columns.contains("vec_id") && resolved.columns.contains("v"))
   }
 
+  test("a fold after an interrupted compaction survives the finished swap") {
+    import java.nio.file.{Files => JF, Paths => JP}
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(200)
+    val centroids = IvfIndex.train(emb, "vec_id", "embedding", k = 4, iters = 2)
+      .map(_.toSeq).toSeq
+    val path = JF.createTempDirectory("graft-ivf-stale-swap").toString
+    IvfIndex.writeIndex(emb, "vec_id", "embedding", centroids, path)
+    val layout = s"$path/corpus"
+    def negated(mod: Int) = emb.where(col("vec_id") % 9 === mod)
+      .select(col("vec_id"), expr("transform(embedding, x -> -x)").as("embedding"))
+    IvfIndex.maintainIndex(spark, path, "vec_id", negated(1), emb.select("vec_id").limit(0))
+    // CRASH SIM: a compaction completed its fold (tmp + _FRESH) and died
+    // before the swap
+    val tmp = JP.get(s"$layout.compact.tmp")
+    IvfIndex.readLayout(spark, layout, "vec_id")
+      .write.partitionBy("bucket").parquet(tmp.toString)
+    val freshNames = {
+      val s = JF.list(tmp)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("bucket=")).toSeq
+      } finally s.close()
+    }
+    JF.write(tmp.resolve("_FRESH"), freshNames.mkString("\n").getBytes("UTF-8"))
+    // the next fold lands, then a compaction finishes the interrupted swap:
+    // the fold's generation must not be cleared with the folded ones
+    IvfIndex.maintainIndex(spark, path, "vec_id", negated(4), emb.select("vec_id").limit(0))
+    IvfIndex.compactLayout(spark, layout, "vec_id")
+    IvfIndex.compactLayout(spark, layout, "vec_id")
+    assert(IvfIndex.deltaGens(layout).isEmpty && !JF.exists(tmp))
+    val want = emb.select(col("vec_id"),
+      when((col("vec_id") % 9).isin(1, 4), expr("transform(embedding, x -> -x)"))
+        .otherwise(col("embedding")).as("embedding"))
+    val got = spark.read.parquet(layout).select(col("vec_id"), col("v"))
+    val expected = want.select(col("vec_id"), IvfIndex.normalized(col("embedding")).as("v"))
+    assert(got.count() === emb.count())
+    assert(got.except(expected).count() === 0L, "the second fold's upserts were lost")
+  }
+
   test("searching an EMPTY index answers empty, not a schema-inference crash") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val centroids = IvfIndex.train(emb.limit(16), "vec_id", "embedding", k = 2, iters = 1)
@@ -322,6 +362,117 @@ class IvfSpec extends AnyFunSuite {
       .searchTopK(postDml, postDml.where(col("vec_id") < 3), "vec_id",
         "embedding", centroids, nprobe = 8, k = 5)
       .select(col("qid"), col("vec_id"), col("rn"))
+    assert(got.except(want).count() === 0L && want.except(got).count() === 0L)
+  }
+
+  /** Spark jobs `f` submits from this thread (tagged by a local property,
+    * so work of any other thread is not counted). */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.jobs") == tag)) {
+          jobs.incrementAndGet(); ()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try f finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      org.apache.spark.TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
+
+  test("maintain and search submit the same jobs at any pending depth; one file per bucket") {
+    import java.nio.file.{Files => JF}
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(300)
+    val centroids = IvfIndex.train(emb, "vec_id", "embedding", k = 8, iters = 2)
+      .map(_.toSeq).toSeq
+    val path = JF.createTempDirectory("graft-ivf-flat").toString
+    IvfIndex.writeIndex(emb, "vec_id", "embedding", centroids, path)
+    val layout = s"$path/corpus"
+    // each fold re-embeds 6 ids (antipodes: they move buckets, so the
+    // generation holds new rows AND tombstones) under graft's default
+    // 8-generation threshold: depths 1..7 never compact
+    def fold(i: Int): Int = {
+      val up = emb.where(col("vec_id") % 40 === i)
+        .select(col("vec_id"), expr("transform(embedding, x -> -x)").as("embedding"))
+      jobsOf(IvfIndex.maintainIndex(spark, path, "vec_id", up,
+        up.select(col("vec_id")).limit(0), Some(centroids)))
+    }
+    val queries = emb.where(col("vec_id") < 4)
+    def search(): Int = jobsOf(IvfIndex.searchIndex(spark, path, queries, "vec_id",
+      "embedding", nprobe = 2, k = 5, Some(centroids)).collect())
+    fold(0)
+    assert(IvfIndex.deltaGens(layout).size === 1)
+    val (search1, maintain1) = (search(), fold(1))
+    (2 until 6).foreach(fold)
+    assert(IvfIndex.deltaGens(layout).size === 6)
+    val (search6, maintain6) = (search(), fold(6))
+    assert(IvfIndex.deltaGens(layout).size === 7, "no compaction below the threshold")
+    assert(maintain6 === maintain1,
+      s"maintainIndex jobs at depth 6 ($maintain6) differ from depth 1 ($maintain1)")
+    assert(search6 === search1,
+      s"searchIndex jobs at depth 6 ($search6) differ from depth 1 ($search1)")
+
+    // the tiny fold's generation: at most one data file per bucket
+    val newest = IvfIndex.deltaGens(layout).last
+    val perBucket = {
+      val s = JF.walk(newest)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+          .groupBy(_.getParent.getFileName.toString).map { case (b, fs) => b -> fs.size }
+      } finally s.close()
+    }
+    assert(perBucket.size > 1, s"test premise: the fold touches several buckets ($perBucket)")
+    assert(perBucket.values.forall(_ <= 1), s"more than one file per bucket: $perBucket")
+  }
+
+  test("generations take the on-disk base's types, not the caller's (int id column)") {
+    import org.apache.spark.sql.types.IntegerType
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(300)
+    val intEmb = emb.select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
+    val centroids = IvfIndex.train(intEmb, "vec_id", "embedding", k = 4, iters = 2)
+      .map(_.toSeq).toSeq
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-intid").toString
+    IvfIndex.writeIndex(intEmb, "vec_id", "embedding", centroids, path)
+    val layout = s"$path/corpus"
+    // the caller folds with LONG ids (the source table's type) over an
+    // index whose base stores them as int
+    val ups1 = emb.where(col("vec_id") % 9 === 1)
+      .select(col("vec_id"), expr("transform(embedding, x -> -x)").as("embedding"))
+    // deleted for good: not re-upserted by either fold
+    val deleted = col("vec_id") % 13 === 2 && !(col("vec_id") % 9).isin(1, 4)
+    IvfIndex.maintainIndex(spark, path, "vec_id", ups1,
+      emb.where(deleted).select(col("vec_id")))
+    val ups2 = emb.where(col("vec_id") % 9 === 4)
+      .select(col("vec_id"), expr("transform(embedding, x -> -x)").as("embedding"))
+    IvfIndex.maintainIndex(spark, path, "vec_id", ups2, ups2.select(col("vec_id")).limit(0))
+    assert(IvfIndex.deltaGens(layout).size === 2)
+    IvfIndex.deltaGens(layout).foreach(g => assert(
+      spark.read.parquet(g.toString).schema("vec_id").dataType === IntegerType,
+      s"generation $g must store the base's int id"))
+    assert(IvfIndex.readLayout(spark, layout, "vec_id").schema("vec_id").dataType
+      === IntegerType)
+
+    val postDml = intEmb.where(!deleted)
+      .select(col("vec_id"), when(col("vec_id") % 9 === 1 || col("vec_id") % 9 === 4,
+        expr("transform(embedding, x -> -x)")).otherwise(col("embedding")).as("embedding"))
+    assert(IvfIndex.readLayout(spark, layout, "vec_id").count() === postDml.count())
+    val queries = postDml.where(col("vec_id") < 5)
+    val got = IvfIndex.searchIndex(spark, path, queries, "vec_id", "embedding",
+        nprobe = 4, k = 5)
+      .select(col("qid"), col("vec_id"), col("rn"))
+    val want = IvfIndex.searchTopK(postDml, queries, "vec_id", "embedding",
+        centroids, nprobe = 4, k = 5)
+      .select(col("qid"), col("vec_id"), col("rn"))
+    assert(got.count() === queries.count() * 5)
     assert(got.except(want).count() === 0L && want.except(got).count() === 0L)
   }
 }
